@@ -17,12 +17,12 @@ O(n) complexity contract as the reference's streaming implementation.
 
 Scale note: one shuffle on the key; each key group must fit in one
 Arrow batch stream (pandas grouped-map). Keyless series do NOT fall
-into a single group: they run a distributed two-phase prefix scan
-(range-partition by time, per-partition affine-scan partials, driver
-composes P carries, broadcast-join applies the carry-in per row) —
-the reference's distributed prefix-aggregation pattern
-(``rdd/function/summarize/Summarizations.scala:51-122``) expressed as
-Catalyst + one mapInPandas pass.
+into a single group: they run on the distributed prefix engine
+(``operators/prefix.py``) — its time-bucket layout, one mapInPandas
+affine scan per bucket, and its ``affine`` carry composing the
+buckets' maps in SQL — the reference's distributed
+prefix-aggregation pattern
+(``rdd/function/summarize/Summarizations.scala:51-122``).
 """
 
 from __future__ import annotations
@@ -203,9 +203,10 @@ def _apply_per_key(df: DataFrame, column: str, out_name, key: Sequence[str],
         return vals if multi else (vals,)
 
     def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        # (time, value) tie order: same max-struct rule as the keyless
-        # distributed scan, so both paths are layout-independent and agree
-        # bitwise on inputs with duplicate timestamps.
+        # (time, value) tie order — the order the keyless distributed
+        # route's layout sorts on (tie_break=[column]), so both keyless
+        # routes are layout-independent and agree on duplicate
+        # timestamps.
         pdf = pdf.sort_values(["__tns", column, *tie], kind="stable")
         t = pdf["__tns"].to_numpy(dtype=np.int64)
         x = pdf[column].to_numpy(dtype=np.float64)
@@ -253,148 +254,101 @@ def _apply_per_key(df: DataFrame, column: str, out_name, key: Sequence[str],
     return with_ns.groupBy().applyInPandas(compute, schema)
 
 
-# The distributed scan persists its mapInPandas subtree because both the
-# partials collect and the caller's eventual action consume it. The caller's
-# first action is invisible here, so the cache is released at the NEXT
-# keyless-distributed call (or explicitly via release_scan_caches()) —
-# bounding retention to one cached DataFrame instead of one per call.
-_SCAN_CACHE: list = []
+def _keyless_prefix_scan(df: DataFrame, column: str, out_name: str,
+                         coeff_fn, divide: bool) -> DataFrame:
+    """Distributed keyless scan on the prefix engine
+    (``operators/prefix.py``) — no single-group exchange.
 
+    The recurrence E_i = d_i E_{i-1} + c_i is affine, so each time
+    bucket of the engine layout maps its incoming state linearly:
+    E = L + E_in·e^{-T}, where L is the bucket's scan from zero state
+    and T its cumulative -ln(decay). One ``mapInPandas`` runs
+    :func:`_affine_scan` per bucket, streaming batch by batch, and the
+    engine's ``affine`` carry composes the preceding buckets' maps and
+    applies them per row in SQL (the reference's
+    ``Summarizations.scala:51-122`` pattern). exp(-T) underflowing to
+    0.0 far from the carry origin is the correct decay, not an error.
 
-def _release_prior_scan_cache() -> None:
-    while _SCAN_CACHE:
-        try:
-            _SCAN_CACHE.pop().unpersist()
-        except Exception:  # noqa: BLE001 — session may already be stopped
-            pass
-
-
-def release_scan_caches() -> None:
-    """Unpersist the scan subtree cached by the most recent keyless
-    distributed :func:`ewma` / :func:`exponential_smoothing` call."""
-    _release_prior_scan_cache()
-
-
-def _keyless_distributed(df: DataFrame, column: str, out_name: str,
-                         coeff_fn, divide: bool,
-                         num_partitions: int | None = None) -> DataFrame:
-    """Distributed keyless prefix scan — no single-group exchange.
-
-    The recurrence E_i = d_i E_{i-1} + c_i is affine, so a chunk of the
-    series maps its incoming state linearly: E_out = L_end + E_in * e^-T_end
-    where L is the chunk's scan from zero state and T its cumulative
-    -ln(decay). Phases (reference ``Summarizations.scala:51-122`` pattern):
-
-      1. range-partition by time, sort within partitions (ONE shuffle of
-         the data; persisted);
-      2. tiny aggregate collects per-partition boundary rows (prev_t,
-         prev_x feed the boundary decay step / interpolation);
-      3. one ``mapInPandas`` pass computes per-row (L, T) streaming
-         batch-by-batch — never holds a partition in memory;
-      4. the P (L_end, T_end) partials compose on the driver into a
-         per-partition carry-in E_in (P scalars);
-      5. a broadcast join + JVM expression applies
-         ``L + E_in * exp(-T)`` per row (and the aux series for 'core').
-
-    exp(-T) underflowing to 0.0 for rows far from the carry origin is the
-    mathematically correct decay, not an error.
-
-    Duplicate timestamps are ordered by (time, value) — the engine-wide
-    max-struct tie rule — so every extraction below (boundary prev_x,
-    partition-end partials) is a deterministic function of the data, not
-    of physical layout. Equal keys never straddle range partitions, so a
-    tie group is always wholly inside one partition.
+    A bucket's first row decays from the previous bucket's last row
+    and ('previous'/'linear') interpolates from its value: that
+    (t, x) is a ``last``-kind carry joined onto the layout before the
+    scan. The layout sorts on (time, value, remaining columns) — the
+    single-group scan's (time, value) tie rule — and its buckets are a
+    pure function of the time value, so every output is a function of
+    the data alone, whatever the physical layout or cache state. The
+    scan output feeds both the partials and the final join, so the
+    engine persists it in the layout's place: one Python pass per
+    action.
     """
-    spark = df.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    from .prefix import _attach_pin, _build_layout, _carry_in, _retain
+
     in_cols = list(df.columns)
-    xcol = F.col(column).cast("double")
-    _release_prior_scan_cache()
-    sdf = (df.withColumn("__tns", time_ns_expr(df))
-             .repartitionByRange(P, F.col("__tns"))
-             .sortWithinPartitions(F.col("__tns"), xcol)
-             .withColumn("__pid", F.spark_partition_id())
-             .persist())
-    # per-partition boundary rows (small: P rows collected). last_x must
-    # be the row processed LAST under the (time, value) sort -> max-struct.
-    binfo = (sdf.groupBy("__pid")
-             .agg(F.max("__tns").alias("last_t"),
-                  F.max_by(xcol, F.struct(F.col("__tns"), xcol))
-                   .alias("last_x"))
-             .collect())
-    prev_map: dict = {}
-    prev = None
-    for r in sorted(binfo, key=lambda r: r["__pid"]):
-        prev_map[r["__pid"]] = prev
-        prev = (r["last_t"], r["last_x"])
-    bc = spark.sparkContext.broadcast(prev_map)
+    series = ("p", "a") if divide else ("p",)
 
-    schema = T.StructType(list(sdf.schema.fields) + [
-        T.StructField("__rid", T.LongType()),
-        T.StructField("__L", T.DoubleType()),
-        T.StructField("__La", T.DoubleType()),
-        T.StructField("__T", T.DoubleType())])
-
-    def scan_partition(batches):
-        state = None  # (prev_t, prev_x, L_carry, La_carry, T_offset, rid)
+    def scan(batches):
+        pid = None
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            if state is None:
-                pv = bc.value.get(int(pdf["__pid"].iloc[0]))
-                prev_t, prev_x = pv if pv is not None else (None, None)
-                l_carry = la_carry = t_off = 0.0
-                rid0 = 0
-            else:
-                prev_t, prev_x, l_carry, la_carry, t_off, rid0 = state
+            pids = pdf["__pid"].to_numpy()
             t = pdf["__tns"].to_numpy(dtype=np.int64)
             x = pdf[column].to_numpy(dtype=np.float64)
-            steps, c, aux_c = coeff_fn(t, x, prev_t, prev_x)
-            cum_t = np.cumsum(steps)
-            w = np.exp(-cum_t)  # underflow -> 0.0 is correct decay
-            lvals = _affine_scan(steps, c) + l_carry * w
-            lavals = _affine_scan(steps, aux_c) + la_carry * w
-            tvals = t_off + cum_t
-            pdf = pdf.copy()
-            pdf["__rid"] = np.arange(rid0, rid0 + len(pdf), dtype=np.int64)
-            pdf["__L"] = lvals
-            pdf["__La"] = lavals
-            pdf["__T"] = tvals
-            state = (int(t[-1]), float(x[-1]), float(lvals[-1]),
-                     float(lavals[-1]), float(tvals[-1]), rid0 + len(pdf))
-            yield pdf
+            out = np.empty((len(series) + 1, len(pdf)))  # (L..., T)
+            cuts = [0, *(np.flatnonzero(pids[1:] != pids[:-1]) + 1).tolist(),
+                    len(pdf)]
+            for s0, s1 in zip(cuts, cuts[1:]):
+                if pids[s0] != pid:  # a new bucket: zero state
+                    pid = pids[s0]
+                    state = np.zeros(len(series) + 1)
+                    prev = ((None, None) if pdf["__first"].iat[s0] else
+                            (int(pdf["__prev_t"].iat[s0]),
+                             pdf["__prev_x"].iat[s0]))
+                steps, *cs = coeff_fn(t[s0:s1], x[s0:s1], *prev)
+                cum = np.cumsum(steps)
+                w = np.exp(-cum)  # underflow -> 0.0 is correct decay
+                for i, c in enumerate(cs[:len(series)]):
+                    out[i, s0:s1] = _affine_scan(steps, c) + state[i] * w
+                out[-1, s0:s1] = state[-1] + cum
+                state = out[:, s1 - 1].copy()
+                prev = (int(t[s1 - 1]), x[s1 - 1])
+            res = pdf.drop(columns=["__first", "__prev_t", "__prev_x"])
+            for i, n in enumerate(series):
+                res[f"__L{n}"] = out[i]
+            res["__T"] = out[-1]
+            yield res
 
-    scanned = sdf.mapInPandas(scan_partition, schema).persist()
-    _SCAN_CACHE.append(scanned)
-    # partition-end partials keyed on the explicit scan row index (__rid):
-    # duplicate (time, value) rows at the boundary cannot misresolve.
-    partials = (scanned.groupBy("__pid")
-                .agg(F.max_by("__L", "__rid").alias("l_end"),
-                     F.max_by("__La", "__rid").alias("la_end"),
-                     F.max("__T").alias("t_end"))
-                .collect())
-    sdf.unpersist()  # scanned is materialized by the collect above
-    e_rows, ep, ea = [], 0.0, 0.0
-    for r in sorted(partials, key=lambda r: r["__pid"]):
-        e_rows.append((int(r["__pid"]), float(ep), float(ea)))
-        w = math.exp(-r["t_end"]) if r["t_end"] < 700.0 else 0.0
-        ep = r["l_end"] + ep * w
-        ea = r["la_end"] + ea * w
-    e_df = spark.createDataFrame(e_rows or [(0, 0.0, 0.0)],
-                                 "__pid int, __ep double, __ea double")
-    joined = scanned.join(F.broadcast(e_df), "__pid", "left")
-    w = F.exp(-F.col("__T"))
-    primary = F.col("__L") + F.coalesce(F.col("__ep"), F.lit(0.0)) * w
+    # the layout fans its P buckets over 4P hash partitions, most of
+    # them empty, and every task pays a scheduling (and, in the Python
+    # stage, a worker) round trip: run P tasks instead. Coalescing keeps
+    # each bucket's rows contiguous and sorted, all the kernel needs.
+    p = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    sdf = _build_layout(df, [column], p).coalesce(p)
+    last = F.struct("__tns", F.col(column).cast("double").alias("x"))
+    fed, _ = _carry_in(sdf.withColumn("__cs_prev", last), {"prev": "last"})
+    carry = F.col("__carry_prev")
+    fed = fed.select(*sdf.columns, carry.isNull().alias("__first"),
+                     # 0 when first: a null long would reach pandas as float
+                     F.coalesce(carry["__tns"], F.lit(0)).alias("__prev_t"),
+                     carry["x"].alias("__prev_x"))
+    schema = T.StructType(
+        list(sdf.schema.fields)
+        + [T.StructField(f"__L{n}", T.DoubleType()) for n in series]
+        + [T.StructField("__T", T.DoubleType())])
+    scanned, pin = _retain(fed.mapInPandas(scan, schema))
+    stated = scanned.withColumns(
+        {f"__cs_{n}": F.struct(F.col(f"__L{n}").alias("L"),
+                               F.col("__T").alias("T")) for n in series})
+    joined, state = _carry_in(stated, {n: "affine" for n in series})
+    out = state["p"]["L"]
     if divide:
-        out = primary / (F.col("__La") + F.coalesce(F.col("__ea"), F.lit(0.0)) * w)
-    else:
-        out = primary
-    return joined.withColumn(out_name, out).select(in_cols + [out_name])
+        out = out / state["a"]["L"]
+    return _attach_pin(joined.select(*in_cols, out.alias(out_name)), pin)
 
 
 # keyless inputs at most this big (Catalyst plan-stats estimate) run as a
-# single Arrow group — cheaper than the 5-job distributed scan. Unknown
-# stats report ~8 EB, so "can't tell" always takes the distributed path.
+# single Arrow group — cheaper than the multi-job distributed scan.
+# Unknown stats report ~8 EB, so "can't tell" always takes the
+# distributed path.
 _KEYLESS_SINGLE_GROUP_MAX_BYTES = 64 << 20
 
 
@@ -413,7 +367,7 @@ def _apply(df: DataFrame, column: str, out_name: str, key: Sequence[str],
     if distributed is None:
         distributed = _estimated_bytes(df) > _KEYLESS_SINGLE_GROUP_MAX_BYTES
     if distributed:
-        return _keyless_distributed(df, column, out_name, coeff_fn, divide)
+        return _keyless_prefix_scan(df, column, out_name, coeff_fn, divide)
     return _apply_per_key(df, column, out_name, (),
                           _scan_values(coeff_fn, divide))
 
@@ -425,7 +379,7 @@ def ewma(df: DataFrame, column: str, alpha: float = 0.05,
     ``Summarizers.scala:548-621``). Output column ``<col>_ewma``.
 
     ``distributed`` applies to keyless input only: True forces the
-    two-phase partitioned prefix scan, False the single Arrow group,
+    distributed prefix-engine scan, False the single Arrow group,
     None (default) picks by estimated input size."""
     _check_alpha(alpha)
     if convention not in ("core", "legacy"):

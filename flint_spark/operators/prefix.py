@@ -10,7 +10,8 @@ systematic scale-killer a 100 TB deployment would hit (r6 verdict).
 
 This module is the Spark-expression analogue of that two-phase plan,
 generalized over MERGEABLE STATE rather than one hard-coded recurrence
-(the affine-EWMA twin lives in ``ema._keyless_distributed``):
+— every distributed keyless running summary (bars, changepoint,
+aggregate, sampling and the EMA family) runs on it:
 
 1. bucket rows into time-quantile partitions: approx-quantile
    boundaries (one sampling pass) + an in-JVM binary-search ``__pid``
@@ -24,7 +25,10 @@ generalized over MERGEABLE STATE rather than one hard-coded recurrence
    them and Catalyst silently re-shuffled the full data per pass
    (ADVICE r7);
 2. every state accumulator evaluates as a within-partition cumulative
-   window expression — one WindowExec, no cross-partition traffic;
+   window expression — one WindowExec, no cross-partition traffic. A
+   recurrence no window expression states (the EMA family's affine
+   scan) instead runs as one per-bucket ``mapInPandas`` kernel over
+   the layout, persisted in the layout's place (:func:`_retain`);
 3. a tiny per-partition aggregate extracts each partition's FINAL state
    row (P rows total), and the carry-in for partition p is the
    merge-combine of partitions < p — computed as a window over the
@@ -37,35 +41,41 @@ generalized over MERGEABLE STATE rather than one hard-coded recurrence
 Exchange budget (pinned by ``test_keyless_engine_exchange_budget``):
 ONE data exchange (the ``__pid`` hash layout) + 1 tiny P-row carry
 exchange + 1 broadcast — vs the single-task plan's one exchange INTO
-one partition. Every merge kind below is a commutative-monoid
-combine, so per-partition parallelism never changes results (up to
-the usual float fold association, which tests compare rounded).
+one partition. Every merge kind below is an associative combine
+folded in bucket order, so per-partition parallelism never changes
+results (up to the usual float fold association, which tests compare
+rounded).
 
 Merge kinds: ``sum`` (count/sum — type-preserving, null = empty),
 ``min``/``max`` (null-skipping least/greatest), ``product``, ``last``
 (latest non-null wins; partition order = (time, tie_break) so the
 carry is the previous partitions' last), ``concat`` (ordered array
-concatenation, earlier partitions first).
+concatenation, earlier partitions first), ``affine`` (a
+``struct<L, T>`` holding the map ``E -> L + E·e^{-T}`` of an
+exponential-smoothing recurrence; maps compose as
+``(L₂ + L₁·e^{-T₂}, T₁ + T₂)``, folded bucket by bucket so every
+exponent is <= 0 and nothing overflows).
 """
 
 from __future__ import annotations
 
+import itertools
 import threading
 import weakref
 from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 from ..timeseries import time_ns_expr
 
-__all__ = ["keyless_cumulative", "release_prefix_caches",
-           "set_layout_registry_size", "LAYOUT_STATS"]
+__all__ = ["keyless_cumulative", "release_prefix_caches", "LAYOUT_STATS"]
 
 #: (name, builder(df, over) -> Column, merge_kind)
 CumItem = tuple[str, Callable[[DataFrame, Callable[[Column], Column]], Column], str]
 
-_KINDS = ("sum", "min", "max", "product", "last", "concat")
+_KINDS = ("sum", "min", "max", "product", "last", "concat", "affine")
 
 # Persisted-layout lifetime (ADVICE r7, rebuilt in r8): correctness
 # does NOT depend on the persist — the layout sorts on a TOTAL order
@@ -92,27 +102,8 @@ _KEEP: list = []
 #: observability (r8 verdict item 6): a pipeline interleaving more
 #: than _KEEP_MAX keyless engine frames silently recomputes evicted
 #: layouts — wasted work, never corruption. These counters make that
-#: visible so the knob below can be sized instead of guessed at.
+#: visible.
 LAYOUT_STATS = {"built": 0, "reused": 0, "evicted": 0}
-
-
-def set_layout_registry_size(n: int) -> int:
-    """Resize the strong-ref layout registry (default 4). Returns the
-    previous size. Larger = more persisted layouts retained across an
-    interleaved pipeline (memory for speed); eviction only ever costs
-    a deterministic recompute. Excess layouts unpersist immediately."""
-    global _KEEP_MAX
-    if n < 0:
-        raise ValueError("registry size must be >= 0")
-    with _PIN_LOCK:
-        prev, _KEEP_MAX = _KEEP_MAX, int(n)
-        while len(_KEEP) > _KEEP_MAX:
-            LAYOUT_STATS["evicted"] += 1
-            try:
-                _KEEP.pop(0).unpersist()
-            except Exception:  # noqa: BLE001 — session may be stopped
-                pass
-    return prev
 
 
 def _keep_layout(sdf: DataFrame) -> None:
@@ -135,8 +126,6 @@ def _keep_layout(sdf: DataFrame) -> None:
 # a unique literal makes every layout's analyzed plan distinct (its
 # own entry) while the optimizer constant-folds the filter away before
 # execution — zero runtime cost.
-import itertools
-
 _LAYOUT_SEQ = itertools.count()
 
 
@@ -208,24 +197,34 @@ def release_prefix_caches() -> None:
                 pass
 
 
-def _carry_agg(kind: str, c: Column) -> Column:
+def _carry_agg(kind: str, c: Column, w: WindowSpec) -> Column:
     """Combine per-partition FINAL states into the carry for the NEXT
-    partition — evaluated over the P-row partials table ordered by
-    partition id, frame = strictly-preceding partitions."""
+    partition — evaluated over the P-row partials table with window
+    ``w`` (ordered by partition id, frame = strictly-preceding
+    partitions)."""
     if kind == "sum":
-        return F.sum(c)
+        return F.sum(c).over(w)
     if kind == "min":
-        return F.min(c)
+        return F.min(c).over(w)
     if kind == "max":
-        return F.max(c)
+        return F.max(c).over(w)
     if kind == "product":
-        return F.product(c)
+        return F.product(c).over(w)
     if kind == "last":
-        return F.last(c, ignorenulls=True)
+        return F.last(c, ignorenulls=True).over(w)
     if kind == "concat":
         # collect_list skips null partials (all-null partitions carry
         # nothing); flatten preserves partition order
-        return F.flatten(F.collect_list(c))
+        return F.flatten(F.collect_list(c).over(w))
+    if kind == "affine":
+        # sequential fold over the ordered preceding maps, starting at
+        # the identity (0, 0); m.T >= 0, so exp never overflows
+        return F.aggregate(
+            F.collect_list(c).over(w),
+            F.struct(F.lit(0.0).alias("L"), F.lit(0.0).alias("T")),
+            lambda acc, m: F.struct(
+                (m["L"] + acc["L"] * F.exp(-m["T"])).alias("L"),
+                (acc["T"] + m["T"]).alias("T")))
     raise ValueError(f"unknown merge kind {kind!r} (one of {_KINDS})")
 
 
@@ -248,7 +247,114 @@ def _merge(kind: str, cs: Column, carry: Column) -> Column:
         return (F.when(carry.isNull(), cs)
                 .when(cs.isNull(), carry)
                 .otherwise(F.concat(carry, cs)))
+    if kind == "affine":
+        # the carry is never null: the first partition's is the identity
+        return F.struct(
+            (cs["L"] + carry["L"] * F.exp(-cs["T"])).alias("L"),
+            (carry["T"] + cs["T"]).alias("T"))
     raise ValueError(f"unknown merge kind {kind!r} (one of {_KINDS})")
+
+
+def _build_layout(df: DataFrame, tie_break: Sequence[str] = (),
+                  num_partitions: int | None = None) -> DataFrame:
+    """The engine layout of ``df`` (not yet persisted): ``__tns``, the
+    time bucket ``__pid`` and the within-bucket row number ``__mid``,
+    hash-partitioned on ``__pid`` and sorted on the total order
+    (``__tns``, ``tie_break``, remaining orderable data columns)."""
+    from .asof import upper_bound_expr
+
+    spark = df.sparkSession
+    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # __pid is a VALUE-derived time bucket (quantile boundaries +
+    # in-JVM binary search), not spark_partition_id() over a range
+    # exchange: RangePartitioning(__tns) does not satisfy the window's
+    # ClusteredDistribution(__pid), so the old layout paid a SECOND
+    # full hash exchange Catalyst inserted silently (ADVICE r7 — the
+    # "1 range shuffle" budget was wrong). A hash repartition on an
+    # expression-derived __pid is the window's exact required
+    # distribution: ONE data exchange, verified by the plan_counts
+    # pins. Equal timestamps share a bucket by construction (the
+    # boundary predicate is a function of the time value), preserving
+    # the tie-merge contract. And because the boundaries are literals
+    # fixed at construction, a recompute (cache evicted or cleared)
+    # reproduces the same buckets.
+    tns = time_ns_expr(df)
+    err = 1.0 / max(p * 8, 64)
+    # p <= 1: no boundaries — approxQuantile rejects an empty
+    # probability list (r8 review: NPE under shuffle.partitions=1)
+    bounds = [] if p <= 1 else sorted(set(
+        df.select(tns.alias("__tns"))
+        .approxQuantile("__tns", [i / p for i in range(1, p)], err)))
+    pid = (upper_bound_expr(F.lit(bounds), F.col("__tns")).cast("int")
+           if bounds else F.lit(0))
+    # 4x partitions per distinct pid: hashing ~P pid values into P
+    # partitions pigeonholes ~1/e of tasks empty and piles 2-4
+    # buckets on others; the wider exchange keeps max-load ~1 and
+    # every downstream window still reuses HashPartitioning(__pid).
+    #
+    # __mid is row_number() over a TOTAL order — (__tns, tie_break,
+    # then every orderable data column), NOT
+    # monotonically_increasing_id(). Two reasons (r8 review):
+    # 1. DETERMINISM BY CONSTRUCTION: rows equal on the full sort key
+    #    are identical rows, so any recompute reproduces the same
+    #    (row, __mid) multiset — the window and partials subtrees can
+    #    never diverge on ties even with the cache cold, and layout
+    #    eviction is purely a perf event. The engine-wide max-struct
+    #    philosophy (sort by time THEN values), applied to the layout
+    #    itself.
+    # 2. CACHE SUBSTITUTION: the window and partials subtrees form a
+    #    self-join over this layout; Spark's self-join deduplication
+    #    clones one branch, and a nondeterministic expression
+    #    canonicalizes as never-equal after cloning, so the cache
+    #    manager refused to substitute the persisted layout — BOTH
+    #    branches silently recomputed the full repartition+sort from
+    #    the scan (observed: two layout exchanges, zero
+    #    InMemoryTableScans).
+    # Map-typed columns are unorderable and excluded; rows equal up to
+    # map values then tie arbitrarily, which only reorders
+    # 'last'/'concat' state among rows identical on every orderable
+    # column.
+    extra = [c for c, t in df.dtypes
+             if not c.startswith("__") and c not in tie_break
+             and "map<" not in t]
+    order_cols = [F.col(c) for c in ("__tns", *tie_break, *extra)]
+    w_mid = Window.partitionBy("__pid").orderBy(*order_cols)
+    salt = next(_LAYOUT_SEQ)
+    return (df.where(F.lit(salt).isNotNull())  # plan salt, folds away
+              .withColumn("__tns", tns)
+              .withColumn("__pid", pid)
+              .repartition(4 * (len(bounds) + 1), "__pid")
+              .sortWithinPartitions(*order_cols)
+              .withColumn("__mid", F.row_number().over(w_mid)))
+
+
+def _retain(sdf: DataFrame) -> tuple[DataFrame, _LayoutPin]:
+    """Persist a built layout under the pin + LRU registry: it executes
+    once however many subtrees of the caller's plan consume it."""
+    sdf = sdf.persist()
+    _keep_layout(sdf)
+    return sdf, _LayoutPin(sdf)
+
+
+def _carry_in(stated: DataFrame, kinds: dict[str, str]
+              ) -> tuple[DataFrame, dict[str, Column]]:
+    """Join each partition's carry-in onto ``stated`` — a layout whose
+    ``__cs_<name>`` columns hold the within-partition cumulative state
+    of each item in ``kinds`` (name -> merge kind) — and return the
+    joined frame (carries as ``__carry_<name>``) with the merged global
+    state of each item."""
+    # P-row partials: each partition's state at its FINAL row
+    partials = (stated.groupBy("__pid")
+                .agg(*[F.max_by(F.col(f"__cs_{n}"), F.col("__mid"))
+                       .alias(f"__cs_{n}") for n in kinds]))
+    w_prev = (Window.orderBy("__pid")
+              .rowsBetween(Window.unboundedPreceding, -1))
+    carry = partials.select(
+        "__pid", *[_carry_agg(k, F.col(f"__cs_{n}"), w_prev)
+                   .alias(f"__carry_{n}") for n, k in kinds.items()])
+    joined = stated.join(F.broadcast(carry), "__pid", "left")
+    return joined, {n: _merge(k, F.col(f"__cs_{n}"), F.col(f"__carry_{n}"))
+                    for n, k in kinds.items()}
 
 
 def keyless_cumulative(
@@ -286,86 +392,18 @@ def keyless_cumulative(
     layouts, ADVICE r7); retention is purely a perf matter — see the
     determinism note above.
     """
-    for _, _, kind in items:
+    kinds = {n: k for n, _, k in items}
+    for kind in kinds.values():
         if kind not in _KINDS:
             raise ValueError(f"unknown merge kind {kind!r} (one of {_KINDS})")
-    reuse = "__pid" in df.columns
     data_cols = [c for c in df.columns if not c.startswith("__")]
-    layout_cols = ["__tns", "__pid", "__mid"]
-    if reuse:
+    if "__pid" in df.columns:
         sdf = df
         with _PIN_LOCK:
             LAYOUT_STATS["reused"] += 1
         pin = getattr(df, "_flint_prefix_pin", None)
     else:
-        spark = df.sparkSession
-        p = num_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions"))
-        # __pid is a VALUE-derived time bucket (quantile boundaries +
-        # in-JVM binary search), not spark_partition_id() over a range
-        # exchange: RangePartitioning(__tns) does not satisfy the
-        # window's ClusteredDistribution(__pid), so the old layout paid
-        # a SECOND full hash exchange Catalyst inserted silently
-        # (ADVICE r7 — the "1 range shuffle" budget was wrong). A
-        # hash repartition on an expression-derived __pid is the
-        # window's exact required distribution: ONE data exchange,
-        # verified by the plan_counts pins. Equal timestamps share a
-        # bucket by construction (the boundary predicate is a function
-        # of the time value), preserving the tie-merge contract.
-        from .asof import upper_bound_expr
-
-        tns = time_ns_expr(df)
-        err = 1.0 / max(p * 8, 64)
-        # p <= 1: no boundaries — approxQuantile rejects an empty
-        # probability list (r8 review: NPE under shuffle.partitions=1)
-        bounds = [] if p <= 1 else sorted(set(
-            df.select(tns.alias("__tns"))
-            .approxQuantile("__tns", [i / p for i in range(1, p)], err)))
-        pid = (upper_bound_expr(F.lit(bounds), F.col("__tns"))
-               .cast("int") if bounds else F.lit(0))
-        # 4x partitions per distinct pid: hashing ~P pid values into P
-        # partitions pigeonholes ~1/e of tasks empty and piles 2-4
-        # buckets on others; the wider exchange keeps max-load ~1 and
-        # every downstream window still reuses HashPartitioning(__pid).
-        #
-        # __mid is row_number() over a TOTAL order — (__tns, tie_break,
-        # then every orderable data column), NOT
-        # monotonically_increasing_id(). Two reasons (r8 review):
-        # 1. DETERMINISM BY CONSTRUCTION: rows equal on the full sort
-        #    key are identical rows, so any recompute reproduces the
-        #    same (row, __mid) multiset — the window and partials
-        #    subtrees can never diverge on ties even with the cache
-        #    cold, and layout eviction is purely a perf event. The
-        #    engine-wide max-struct philosophy (sort by time THEN
-        #    values), applied to the layout itself.
-        # 2. CACHE SUBSTITUTION: the window and partials subtrees form
-        #    a self-join over this layout; Spark's self-join
-        #    deduplication clones one branch, and a nondeterministic
-        #    expression canonicalizes as never-equal after cloning, so
-        #    the cache manager refused to substitute the persisted
-        #    layout — BOTH branches silently recomputed the full
-        #    repartition+sort from the scan (observed: two layout
-        #    exchanges, zero InMemoryTableScans).
-        # Map-typed columns are unorderable and excluded; rows equal up
-        # to map values then tie arbitrarily, which only reorders
-        # 'last'/'concat' state among rows identical on every orderable
-        # column.
-        extra = [c for c, t in df.dtypes
-                 if c in data_cols and c not in tie_break
-                 and "map<" not in t]
-        order_cols = ["__tns", *tie_break, *extra]
-        w_mid = (Window.partitionBy("__pid")
-                 .orderBy(*[F.col(c) for c in order_cols]))
-        salt = next(_LAYOUT_SEQ)
-        sdf = (df.where(F.lit(salt).isNotNull())  # plan salt, folds away
-                 .withColumn("__tns", tns)
-                 .withColumn("__pid", pid)
-                 .repartition(4 * (len(bounds) + 1), "__pid")
-                 .sortWithinPartitions(*[F.col(c) for c in order_cols])
-                 .withColumn("__mid", F.row_number().over(w_mid))
-                 .persist())
-        _keep_layout(sdf)
-        pin = _LayoutPin(sdf)
+        sdf, pin = _retain(_build_layout(df, tie_break, num_partitions))
 
     w_in = (Window.partitionBy("__pid")
             .orderBy("__tns", *[F.col(c) for c in tie_break], "__mid")
@@ -374,22 +412,8 @@ def keyless_cumulative(
     # ONE withColumns projection -> one WindowExec for every state col
     stated = sdf.withColumns(
         {f"__cs_{n}": fn(df, over) for n, fn, _ in items})
-
-    # P-row partials: each partition's state at its FINAL row
-    partials = (stated.groupBy("__pid")
-                .agg(*[F.max_by(F.col(f"__cs_{n}"), F.col("__mid"))
-                       .alias(f"__cs_{n}") for n, _, _ in items]))
-    w_prev = (Window.orderBy("__pid")
-              .rowsBetween(Window.unboundedPreceding, -1))
-    carry = partials.select(
-        "__pid",
-        *[_carry_agg(k, F.col(f"__cs_{n}")).over(w_prev)
-          .alias(f"__carry_{n}") for n, _, k in items])
-
-    joined = stated.join(F.broadcast(carry), "__pid", "left")
-    state = {n: _merge(k, F.col(f"__cs_{n}"), F.col(f"__carry_{n}"))
-             for n, _, k in items}
+    joined, state = _carry_in(stated, kinds)
     outs = render(state)
-    keep = data_cols + (layout_cols if keep_layout else [])
+    keep = data_cols + (["__tns", "__pid", "__mid"] if keep_layout else [])
     result = joined.select(*keep, *[c.alias(n) for n, c in outs.items()])
     return _attach_pin(result, pin) if pin is not None else result

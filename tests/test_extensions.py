@@ -1095,11 +1095,11 @@ def test_uniform_vs_searchsorted_interval_paths_agree(spark, sf_dir,
 
 
 def test_keyless_ema_distributed_matches_single_group(spark):
-    """The distributed keyless prefix scan (range partitions + carry
-    composition) must agree with the single-group scan bitwise-ish
-    (<=1e-12 rel; renormalization boundaries differ) and its physical
-    plan must contain NO single-partition exchange — that is the shape
-    that dies at 100x scale."""
+    """The distributed keyless scan (prefix-engine time buckets + affine
+    carry composition) must agree with the single-group scan
+    bitwise-ish (<=1e-12 rel; renormalization boundaries differ) and
+    its physical plan must contain NO single-partition exchange of the
+    data — that is the shape that dies at 100x scale."""
     import numpy as np
 
     from flint_spark.operators import ema as E
@@ -1129,12 +1129,14 @@ def test_keyless_ema_distributed_matches_single_group(spark):
             < 1e-12, kind
         names = list(_walk(dist._jdf.queryExecution().executedPlan()))
         assert not any("SinglePartition" in n for n in names), names
-        # exactly one full-data exchange: the range partitioning
+        # the data exchange (the engine's __pid hash layout) sits inside
+        # the persisted scan; what stays visible here is the affine
+        # carry's partials and its P-row window
         assert sum(1 for n in names if n == "Exchange") <= 2
 
 
 def test_keyless_ema_duplicate_timestamps_layout_invariant(spark):
-    """Duplicate timestamps (different values) at range-partition cuts:
+    """Duplicate timestamps (different values) at time-bucket cuts:
     the boundary extraction (prev_x carry, partition-end partials) must
     be a deterministic function of the data, not the layout (ADVICE r3:
     max_by('__L','__tns') ties were arbitrary). The series has only 40
@@ -1183,8 +1185,47 @@ def test_keyless_ema_duplicate_timestamps_layout_invariant(spark):
             assert err < 1e-12, (interp, err)
 
 
+def test_keyless_ema_result_reevaluates_exactly(spark, tmp_path):
+    """A keyless distributed ewma result evaluated again after a later
+    keyless ewma call and a cleared cache recomputes its scan from the
+    same time buckets and carries: both collections match the scalar
+    recurrence. Each call builds exactly one engine layout."""
+    import math
+
+    from flint_spark.operators import ema as E
+    from flint_spark.operators.prefix import LAYOUT_STATS
+
+    rng = np.random.default_rng(5)
+    n = 200_000
+    t = np.cumsum(rng.integers(1, 2_000_000_000, n))
+    x = 100 + np.cumsum(rng.normal(0, 0.02, n))
+    path = str(tmp_path / "tape.parquet")
+    pd.DataFrame({"time": t, "price": x}).to_parquet(path)
+    tape = spark.read.parquet(path)
+
+    lam = -math.log1p(-0.05) / 60e9
+    want = np.empty(n)
+    e = 0.0
+    for i in range(n):
+        e = e * math.exp(-lam * (t[i] - t[i - 1])) + x[i] if i else x[i]
+        want[i] = e
+
+    def got(df):
+        return (df.toPandas().sort_values("time")["price_ewma"]
+                .to_numpy())
+
+    built = LAYOUT_STATS["built"]
+    a = E.ewma(tape, "price", 0.05, "1m", distributed=True)
+    assert LAYOUT_STATS["built"] - built == 1
+    np.testing.assert_allclose(got(a), want, rtol=1e-9)
+    b = E.ewma(tape, "price", 0.05, "1m", distributed=True)
+    b.write.format("noop").mode("overwrite").save()
+    spark.catalog.clearCache()
+    np.testing.assert_allclose(got(a), want, rtol=1e-9)
+
+
 def test_keyless_ema_auto_routes_small_input_to_single_group(spark, sf_dir):
-    """Tiny parquet inputs (known plan stats) skip the 5-job distributed
+    """Tiny parquet inputs (known plan stats) skip the multi-job distributed
     scan; unknown-stats inputs (ExistingRDD) must choose distributed."""
     from flint_spark.operators import ema as E
 
@@ -5590,12 +5631,17 @@ def test_keyless_engine_exchange_budget(spark):
     not just claimed. One data exchange (the value-derived __pid hash
     layout every window/aggregate reuses) + 1 tiny P-row carry
     exchange at most; the two-pass CUSUM shares the data exchange
-    (keep_layout) and adds only its own carry jobs."""
+    (keep_layout) and adds only its own carry jobs. Keyless EMA runs
+    on the same engine: counted through its persisted scan, ONE
+    exchange moves the data, the rest move at most one row per time
+    bucket, and ONE Python stage runs the affine scan."""
+    from flint_spark.operators import ema as E
     from flint_spark.operators.changepoint import cusum
     from flint_spark.operators.prefix import keyless_cumulative
-    from flint_spark.plans.audit import plan_counts
+    from flint_spark.plans.audit import PYTHON_NODES, plan_counts
 
-    df = spark.range(50_000).select(
+    n = 50_000
+    df = spark.range(n).select(
         (F.col("id") * 1000).alias("time"),
         (F.col("id") % 37).cast("double").alias("v"))
     items = [("s", lambda d, o: o(F.sum(F.col("v"))), "sum")]
@@ -5605,19 +5651,52 @@ def test_keyless_engine_exchange_budget(spark):
     pc2 = plan_counts(cusum(df, "v", mu=5.0, sigma=3.0, distributed=True))
     assert pc2["shuffles"] <= 3 and pc2["python"] == 0, pc2
 
+    def nodes(node, seen):
+        # the final plan, entering each cached subtree once
+        name = node.nodeName()
+        yield node
+        if name.startswith("InMemoryTableScan"):
+            rel = node.relation()
+            key = spark._jvm.System.identityHashCode(rel.cacheBuilder())
+            if key not in seen:
+                seen.add(key)
+                yield from nodes(rel.cachedPlan(), seen)
+            return
+        if name.startswith("AdaptiveSparkPlan"):
+            yield from nodes(node.executedPlan(), seen)
+            return
+        if "QueryStage" in name:
+            yield from nodes(node.plan(), seen)
+            return
+        for i in range(node.children().length()):
+            yield from nodes(node.children().apply(i), seen)
+
+    buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for fn in (E.ewma, E.exponential_smoothing):
+        res = fn(df, "v", distributed=True)
+        res._jdf.queryExecution().toRdd().count()
+        plan = list(nodes(res._jdf.queryExecution().executedPlan(), set()))
+        moved = [x.metrics().apply("shuffleRecordsWritten").value()
+                 for x in plan if x.nodeName() == "Exchange"]
+        assert sorted(moved)[-1] == n, (fn.__name__, moved)
+        # two carries (the previous bucket's last row, the affine
+        # maps), each a partials exchange plus its P-row window
+        assert len(moved) == 5 and max(sorted(moved)[:-1]) <= buckets, \
+            (fn.__name__, moved)
+        assert sum(x.nodeName() in PYTHON_NODES for x in plan) == 1
+
 
 def test_prefix_layout_registry_eviction_is_recompute_not_corruption(spark):
     """r8 verdict item 6: interleaving MORE keyless engine frames than
-    the strong-ref registry holds (default 4) evicts the oldest
+    the strong-ref registry holds (_KEEP_MAX = 4) evicts the oldest
     persisted layouts — by design a deterministic RECOMPUTE, never
     corruption (the layout sorts on a total order). Pin exactly that:
     5 interleaved frames, evaluate round-robin twice, every result
-    bitwise-stable and correct; the new LAYOUT_STATS counter makes the
-    eviction visible and set_layout_registry_size(5) removes it."""
+    bitwise-stable and correct; the LAYOUT_STATS counter makes the
+    eviction visible."""
     from flint_spark.operators import prefix
     from flint_spark.operators.prefix import (
-        LAYOUT_STATS, keyless_cumulative, release_prefix_caches,
-        set_layout_registry_size)
+        LAYOUT_STATS, keyless_cumulative, release_prefix_caches)
 
     def make(mult):
         df = spark.range(2_000).select(
@@ -5641,18 +5720,33 @@ def test_prefix_layout_registry_eviction_is_recompute_not_corruption(spark):
     for _ in range(2):
         for m, f in zip((3, 5, 7, 11, 13), frames):
             assert last_cum(f) == expect(m), m
-    # a registry sized to the pipeline stops evicting
-    prev = set_layout_registry_size(5)
-    try:
-        release_prefix_caches()
-        base = dict(LAYOUT_STATS)
-        frames = [make(m) for m in (3, 5, 7, 11, 13)]
-        for m, f in zip((3, 5, 7, 11, 13), frames):
-            assert last_cum(f) == expect(m), m
-        assert LAYOUT_STATS["evicted"] == base["evicted"]
-    finally:
-        set_layout_registry_size(prev)
-        release_prefix_caches()
+    release_prefix_caches()
+
+
+def test_release_prefix_caches_unpersists_every_keyless_engine_frame(spark):
+    """Keyless EMA, volume bars and CUSUM all persist through the one
+    prefix-engine registry, so release_prefix_caches() returns the
+    persisted-RDD count to where it started."""
+    from flint_spark.operators.bars import volume_bars
+    from flint_spark.operators.changepoint import cusum
+    from flint_spark.operators.ema import ewma
+    from flint_spark.operators.prefix import release_prefix_caches
+
+    jsc = spark.sparkContext._jsc
+    release_prefix_caches()
+    base = jsc.getPersistentRDDs().size()
+    df = spark.createDataFrame(
+        [(i * 1000, float((i * 7) % 23) + 1.0, float(i % 5))
+         for i in range(600)],
+        "time long, p double, vol double")
+    outs = [ewma(df, "p", distributed=True),
+            volume_bars(df, 50.0, "p", "vol", distributed=True),
+            cusum(df, "p", distributed=True)]
+    for out in outs:
+        out.write.format("noop").mode("overwrite").save()
+    assert jsc.getPersistentRDDs().size() > base
+    release_prefix_caches()
+    assert jsc.getPersistentRDDs().size() == base
 
 
 def test_wheel_artifact_handrolled_and_importable(tmp_path):
